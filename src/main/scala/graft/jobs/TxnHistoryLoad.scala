@@ -19,17 +19,34 @@ import org.apache.spark.sql.functions._
   */
 object TxnHistoryLoad {
 
-  /** Infer-on-sample then full load; returns the typed frame. */
+  /** Infer-on-sample then full load; returns the typed frame. A stage
+    * path whose last segment is a glob (such as `*.json.gz`) is read as
+    * its directory with that glob as `pathGlobFilter`: the same files of
+    * the flat stage directory, without Spark probing the literal glob for
+    * a streaming-sink metadata directory (a WARN with a
+    * `FileNotFoundException` trace per read). */
   def read(spark: SparkSession, stageGlob: String): DataFrame = {
     import spark.implicits._
+    val (path, glob) = splitGlob(stageGlob)
+    def reader = glob.foldLeft(spark.read)(_.option("pathGlobFilter", _))
     val sample = spark.read.json(
-      spark.read.text(stageGlob).limit(1000).as[String])
-    val typed = spark.read.schema(sample.schema).json(stageGlob)
+      reader.text(path).limit(1000).as[String])
+    val typed = reader.schema(sample.schema).json(path)
     // case-insensitive by-name landing: normalize to lower-case column
     // names (the reference's MATCH_BY_COLUMN_NAME = CASE_INSENSITIVE)
     val lowered = typed.columns.foldLeft(typed)((d, c) =>
       d.withColumnRenamed(c, c.toLowerCase))
     lowered.withColumn("txn_dt", to_timestamp(col("txn_dt")))
+  }
+
+  /** `dir/<glob>` → (`dir`, Some(`<glob>`)) when only the last segment
+    * holds glob characters; otherwise the path unchanged and None. */
+  private def splitGlob(path: String): (String, Option[String]) = {
+    def isGlob(s: String) = s.exists("*?[{".contains(_))
+    val i = path.lastIndexOf('/')
+    if (i > 0 && isGlob(path.substring(i + 1)) && !isGlob(path.take(i)))
+      (path.take(i), Some(path.substring(i + 1)))
+    else (path, None)
   }
 
   /** Load the stage into a managed overwrite table (COPY INTO twin). */

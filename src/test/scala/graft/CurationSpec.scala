@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import graft.jobs.{CurationPipeline, CustomerStandardize, InvoiceParse, PipelineDag, DagTask}
 
@@ -154,6 +156,45 @@ class CurationSpec extends SparkSpec {
     assert(status("doomed").startsWith("failed:"))
     assert(status("after_doomed").startsWith("skipped: dep doomed"))
     assert(dag.schedules === Map("flaky" -> "60 MINUTE"))
+  }
+
+  test("pipeline DAG: sibling tasks run concurrently") {
+    // each sibling waits for the other; a serial walk times the first one
+    // out (and fails it) instead of hanging
+    val both = new CountDownLatch(2)
+    def sibling(name: String) = DagTask(name, Seq("root"), { _ =>
+      both.countDown()
+      if (!both.await(20, TimeUnit.SECONDS)) sys.error(s"$name ran alone")
+    })
+    val dag = new PipelineDag(Seq(DagTask("root", Nil, _ => ()),
+      sibling("left"), sibling("right"),
+      DagTask("join", Seq("left", "right"), _ => ())))
+    val status = dag.run(spark)
+    assert(status.forall(_._2 == "ok"), status.mkString(", "))
+  }
+
+  test("pipeline DAG: statuses come back in order, whatever the finish " +
+      "order; tasks inherit the caller's local properties") {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentHashMap[String, String]()
+    def record(name: String): Unit =
+      seen.put(name, String.valueOf(sc.getLocalProperty("graft.dag.test")))
+    val dag = new PipelineDag(Seq(
+      DagTask("slow", Nil, { _ => Thread.sleep(300); record("slow") }),
+      DagTask("fast", Nil, _ => record("fast")),
+      DagTask("after_fast", Seq("fast"), _ => record("after_fast")),
+      DagTask("broken", Nil, _ => sys.error("no")),
+      DagTask("after_broken", Seq("broken", "slow"), _ =>
+        fail("dependent of a failed task must not run"))))
+    sc.setLocalProperty("graft.dag.test", "caller")
+    val status = try dag.run(spark)
+      finally sc.setLocalProperty("graft.dag.test", null)
+    assert(status.map(_._1) === dag.order)
+    assert(status.toMap === Map("slow" -> "ok", "fast" -> "ok",
+      "after_fast" -> "ok", "broken" -> "failed: no",
+      "after_broken" -> "skipped: dep broken"))
+    assert(seen.asScala.toMap === Map("slow" -> "caller",
+      "fast" -> "caller", "after_fast" -> "caller"))
   }
 
   test("k-anonymity: conservation and an independent risk recompute") {

@@ -60,4 +60,28 @@ class RealIngestSpec extends SparkSpec {
       col("total") <= 0).count()
     assert(bad === 0, inv.show(false))
   }
+
+  test("txn load: a trailing glob reads only the matching stage files") {
+    val stage = Files.createTempDirectory("graft_txn_glob")
+    def gz(name: String, lines: Seq[String]): Unit = {
+      val out = new java.util.zip.GZIPOutputStream(
+        Files.newOutputStream(stage.resolve(name)))
+      try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+    }
+    def txn(id: Int) = s"""{"TXN_ID":"t$id","TXN_DT":"2024-01-0${id % 9 + 1}""" +
+      s""" 10:00:00.000","CUSTOMER_ID":"$id","TXN_QUANTITY":$id}"""
+    gz("txn_a.json.gz", (1 to 3).map(txn))
+    gz("txn_b.json.gz", (4 to 5).map(txn))
+    gz("other.json.gz.bak", Seq(txn(9)))
+    val df = TxnHistoryLoad.read(spark, s"$stage/*.json.gz")
+    assert(df.columns.toSeq.sorted ===
+      Seq("customer_id", "txn_dt", "txn_id", "txn_quantity"))
+    assert(df.orderBy("txn_id").select("txn_id").as[String](
+      org.apache.spark.sql.Encoders.STRING).collect().toSeq ===
+      (1 to 5).map(i => s"t$i"))
+    assert(df.schema("txn_dt").dataType ===
+      org.apache.spark.sql.types.TimestampType)
+    assert(df.filter(col("txn_dt").isNull).count() === 0)
+  }
 }
